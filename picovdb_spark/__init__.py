@@ -6,7 +6,7 @@ designed for cluster scale.
 
 Everything is expressed DataFrame-first: logical plans are declared with
 the PySpark DataFrame/SQL API so Catalyst handles pushdown, pruning and
-join strategy; NumPy GEMM via `mapInPandas` is used only as the
+join strategy; NumPy GEMM via `mapInArrow` is used only as the
 vectorized fast path for the dense similarity scan.
 """
 

@@ -12,10 +12,17 @@ Reference semantics:
 - auto-id = md5 of the vector bytes (/root/reference/picovdb/pico_vdb.py:54-55);
   here defined over a canonical string encoding (documented deviation,
   SURVEY.md §2.3) so the id is computable by any engine.
+
+`vector_block` and `unit_rows` at the end are the NumPy side of the same
+contract: every Arrow→NumPy kernel decodes its vector column and applies
+the zero ⇒ e₀ rule through them, so the Catalyst and kernel forms of
+the rule live in one module.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -113,3 +120,48 @@ def assert_dim(v: Column, dim: int) -> Column:
     return F.when(F.size(v) == dim, v).otherwise(
         F.raise_error(F.concat(F.lit(f"vector dim mismatch: expected {dim}, got "), F.size(v).cast("string")))
     )
+
+
+def vector_block(col: pa.Array | pa.ChunkedArray, dtype) -> np.ndarray:
+    """(n, dim) matrix from an Arrow list column — the one Arrow→NumPy
+    vector decode. Flattens the list values and reshapes, so there is no
+    per-row Python work; when `dtype` is the Arrow value type the result
+    is a zero-copy READ-ONLY view, otherwise the cast copy. An empty
+    column gives (0, 0).
+
+    Raises ValueError on a null row (it would vanish in the flatten and
+    shift every later row) and on rows of differing length (checked on
+    the list offsets: a total element count that happens to divide by n
+    would otherwise reshape into silently wrong vectors)."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    n = len(col)
+    if n == 0:
+        return np.empty((0, 0), dtype=dtype)
+    if col.null_count:
+        raise ValueError(f"vector column contains {col.null_count} null vectors")
+    lengths = np.diff(col.offsets.to_numpy())
+    dim = int(lengths[0])
+    bad = np.flatnonzero(lengths != dim)
+    if bad.size:
+        raise ValueError(
+            f"ragged vectors: row 0 has dim {dim}, row {int(bad[0])} has "
+            f"dim {int(lengths[bad[0]])}"
+        )
+    vals = col.flatten().to_numpy(zero_copy_only=False)
+    return vals.reshape(n, dim).astype(dtype, copy=False)
+
+
+def unit_rows(m: np.ndarray) -> np.ndarray:
+    """Row-wise v/‖v‖₂ with the zero ⇒ e₀ rule of `l2_normalize`, in the
+    input's precision. Never mutates `m` (it may be a read-only Arrow
+    view or alias a caller's array): zero rows are substituted in a
+    copy, and the divide returns a new matrix."""
+    norms = np.sqrt((m * m).sum(axis=1))
+    zero = norms == 0.0
+    if zero.any():
+        m = m.copy()
+        m[zero] = 0.0
+        m[zero, 0] = 1.0
+        norms[zero] = 1.0
+    return m / norms[:, None]

@@ -36,13 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from picovdb_spark.functions.vector import unit_rows, vector_block
 from picovdb_spark.schema import K_DELETED, K_ID, K_METRICS, K_VECTOR
 
 CLUSTER_COL = "__cluster"
-
-
-def _as_matrix(rows, col: str) -> np.ndarray:
-    return np.asarray([np.asarray(r[col], dtype=np.float64) for r in rows])
 
 
 def stack_vectors(series) -> np.ndarray:
@@ -76,23 +73,7 @@ def sample_matrix(
     total = store.count()
     frac = min(1.0, (sample_size * 1.2) / max(total, 1))
     df = store.select(vector_col).sample(fraction=frac, seed=seed).limit(sample_size)
-    col = df.toArrow().column(0).combine_chunks()
-    n = len(col)
-    if n == 0:
-        return np.empty((0, 0))
-    flat = col.flatten().to_numpy(zero_copy_only=False)
-    return flat.reshape(n, -1).astype(np.float64)
-
-
-def _normalize_rows(m: np.ndarray) -> np.ndarray:
-    norms = np.sqrt((m * m).sum(axis=1))
-    zero = norms == 0.0
-    if zero.any():  # zero vector ⇒ e₀ (store invariant, pico_vdb.py:62-67)
-        m = m.copy()
-        m[zero] = 0.0
-        m[zero, 0] = 1.0
-        norms[zero] = 1.0
-    return m / norms[:, None]
+    return vector_block(df.toArrow().column(0), np.float64)
 
 
 def kmeans_mean_update(x: np.ndarray, assign: np.ndarray, prev: np.ndarray) -> np.ndarray:
@@ -163,7 +144,7 @@ def fit_centroids(
         )
     if sample.size == 0:
         raise ValueError("cannot fit IVF centroids on an empty store")
-    x = _normalize_rows(sample).astype(np.float32)
+    x = unit_rows(sample).astype(np.float32)
     # f32 fit: clustering tolerates it (assignments are argmax over well-
     # separated scores), query-time scoring keeps its own precision
     k = min(n_centroids, len(x))
@@ -177,8 +158,8 @@ def fit_centroids(
     with driver_blas_threads():
         for _ in range(n_iter):
             assign = np.argmax(x @ cent.T, axis=1)  # cosine on unit vectors
-            cent = _normalize_rows(kmeans_mean_update(x, assign, cent))
-    return _normalize_rows(cent.astype(np.float64))
+            cent = unit_rows(kmeans_mean_update(x, assign, cent))
+    return unit_rows(cent.astype(np.float64))
 
 
 def assign_clusters(
@@ -196,7 +177,7 @@ def assign_clusters(
         for pdf in batches:
             if pdf.empty:
                 continue
-            v = _normalize_rows(stack_vectors(pdf[vector_col]))
+            v = unit_rows(stack_vectors(pdf[vector_col]))
             pdf = pdf.copy()
             pdf[CLUSTER_COL] = np.argmax(v @ cent.T, axis=1).astype("int32")
             yield pdf
@@ -435,7 +416,7 @@ def ann_query(
         for pdf in batches:
             if pdf.empty:
                 continue
-            v = _normalize_rows(stack_vectors(pdf[vec_col]))
+            v = unit_rows(stack_vectors(pdf[vec_col]))
             clusters = pdf[CLUSTER_COL].to_numpy().astype(np.int64)
             scores = np.round(b_qmat @ v.T, round_to)  # (nq, n_rows)
             # mask rows outside each query's probe set: (nq, n_rows)
@@ -511,7 +492,7 @@ def rp_signatures(
         for pdf in batches:
             if pdf.empty:
                 continue
-            v = _normalize_rows(stack_vectors(pdf[vector_col]))
+            v = unit_rows(stack_vectors(pdf[vector_col]))
             bits = (v @ p.T) > 0  # (n, n_bits)
             weights = 1 << np.arange(rows_per_band, dtype=np.int64)
             frames = []

@@ -1037,13 +1037,14 @@ def _near_dup_lsh(
     def _cos(va, vb):
         import numpy as np
 
-        from picovdb_spark.operators.ann import _normalize_rows, stack_vectors
+        from picovdb_spark.functions.vector import unit_rows
+        from picovdb_spark.operators.ann import stack_vectors
 
-        # _normalize_rows applies the store's zero→e₀ invariant, so a
+        # unit_rows applies the store's zero→e₀ invariant, so a
         # pair of zero vectors scores 1.0 exactly like the gemm/sql
         # paths (which normalize via l2_normalize) — not 0.0
-        ma = _normalize_rows(stack_vectors(va))
-        mb = _normalize_rows(stack_vectors(vb))
+        ma = unit_rows(stack_vectors(va))
+        mb = unit_rows(stack_vectors(vb))
         return pd.Series(np.einsum("ij,ij->i", ma, mb))
 
     _cos.__annotations__ = {"va": pd.Series, "vb": pd.Series, "return": pd.Series}
@@ -2397,6 +2398,8 @@ def semantic_dedup_pairs(
     chunk_elems = GEMM_CHUNK_ELEMS
 
     def cluster_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        from picovdb_spark.operators.ann import stack_vectors
+
         s = len(pdf)
         empty = pd.DataFrame(
             {"id_a": [], "id_b": [], "cosine": [], "cluster": []}
@@ -2410,7 +2413,7 @@ def semantic_dedup_pairs(
                 f"is s²·d — raise n_clusters (SemDeDup's own knob) so "
                 "clusters shrink, or raise max_cluster_size deliberately"
             )
-        m = np.asarray(list(pdf["v"]), dtype=np.float64)
+        m = stack_vectors(pdf["v"])
         ids = pdf["id"].to_numpy()
         cl = int(pdf["cluster"].iloc[0])
         chunk_rows = max(1, chunk_elems // s)

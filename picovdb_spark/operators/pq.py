@@ -45,7 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from picovdb_spark.operators.ann import _normalize_rows, stack_vectors
+from picovdb_spark.functions.vector import unit_rows, vector_block
+from picovdb_spark.operators.ann import stack_vectors
 from picovdb_spark.schema import K_ID, K_METRICS, K_VECTOR
 
 # Diagnostic toggle for the encode kernel's float32 prescan (below).
@@ -153,7 +154,7 @@ def fit_pq(
         )
     if sample.size == 0:
         raise ValueError("cannot fit PQ codebooks on an empty store")
-    x = _normalize_rows(sample)
+    x = unit_rows(sample)
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -242,7 +243,7 @@ def pq_encode(
         for pdf in batches:
             if pdf.empty:
                 continue
-            v = _normalize_rows(stack_vectors(pdf[vector_col]))
+            v = unit_rows(stack_vectors(pdf[vector_col]))
             if prescan:
                 codes = _subspace_codes_f32(
                     v, v.astype(np.float32), books, neg2bT, cnorm2, margins
@@ -332,7 +333,7 @@ def exact_rescore(
         for pdf in batches:
             if pdf.empty:
                 continue
-            v = _normalize_rows(stack_vectors(pdf[vector_col]))
+            v = unit_rows(stack_vectors(pdf[vector_col]))
             qidx = np.fromiter(
                 (b_qindex[str(q)] for q in pdf["query_id"]), dtype=np.int64
             )
@@ -414,8 +415,7 @@ def adc_local_candidates(
             if n == 0:
                 continue
             code_col = batch.column(2 if b_probes is not None else 1)
-            # zero-copy flatten: list<int32> column → (n, m) matrix
-            codes = code_col.flatten().to_numpy(zero_copy_only=False).reshape(n, m)
+            codes = vector_block(code_col, np.int32)  # zero-copy (n, m) view
             ids = batch.column(0).to_numpy(zero_copy_only=False)
             out_q, out_i, out_s = [], [], []
             if b_probes is None:

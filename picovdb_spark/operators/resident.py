@@ -44,6 +44,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from picovdb_spark.functions.vector import unit_rows, vector_block
 from picovdb_spark.schema import K_ID, K_METRICS, K_VECTOR
 
 _SHM_ROOT_CANDIDATES = ("/dev/shm", tempfile.gettempdir())
@@ -166,20 +167,6 @@ def _serve_with_rearm(store, out: DataFrame, probe_skipped: bool, retry):
         )
         store.invalidate_probe()
         return retry()
-
-
-def _normalize_local_query(vector) -> "np.ndarray":
-    """Float64 normalize with the zero⇒e₀ store invariant — the exact
-    sequence of `collect_normalized_queries` (so in-process scores agree
-    with the distributed path to the last bit before the dtype cast).
-    Shared by both stores' `query_local`."""
-    q = np.asarray(vector, dtype=np.float64).ravel()
-    nrm = float(np.sqrt((q * q).sum()))
-    if nrm == 0.0:
-        q = np.zeros_like(q)
-        q[0] = 1.0
-        return q
-    return q / nrm
 
 
 def _local_topk(scores, ids, *, top_k: int, better_than, round_to: int) -> list[dict]:
@@ -311,16 +298,9 @@ class ResidentGemmStore:
                 n = batch.num_rows
                 if n == 0:
                     continue
-                vals = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-                mat = vals.reshape(n, -1).astype(np.float32)
+                mat = vector_block(batch.column(1), np.float32)
                 if not pre_normalized:
-                    norms = np.sqrt((mat * mat).sum(axis=1))
-                    zero = norms == 0.0
-                    if zero.any():  # zero vector ⇒ e₀ (pico_vdb.py:62-67)
-                        mat[zero] = 0.0
-                        mat[zero, 0] = 1.0
-                        norms[zero] = 1.0
-                    mat /= norms[:, None]
+                    mat = unit_rows(mat)
                 ids_parts.append(batch.column(0).to_numpy(zero_copy_only=False))
                 mat_parts.append(mat)
             rows = 0
@@ -657,7 +637,8 @@ class ResidentGemmStore:
         mats, ids_all = self._local_blocks()
         if not mats:
             return []
-        q32 = _normalize_local_query(vector).astype(np.float32)
+        q = np.asarray(vector, dtype=np.float64).reshape(1, -1)
+        q32 = unit_rows(q)[0].astype(np.float32)
         scores = np.concatenate([mat @ q32 for mat in mats])
         return _local_topk(
             scores, ids_all, top_k=top_k, better_than=better_than, round_to=round_to
@@ -824,15 +805,7 @@ class ResidentIvfStore:
                 if n == 0:
                     continue
                 cols = {name: i for i, name in enumerate(batch.schema.names)}
-                vals = batch.column(cols[vec_col]).flatten().to_numpy(zero_copy_only=False)
-                mat = vals.reshape(n, -1).astype(work_dtype)
-                norms = np.sqrt((mat * mat).sum(axis=1))
-                zero = norms == 0.0
-                if zero.any():  # zero vector => e0 (pico_vdb.py:62-67)
-                    mat[zero] = 0.0
-                    mat[zero, 0] = 1.0
-                    norms[zero] = 1.0
-                mat /= norms[:, None]
+                mat = unit_rows(vector_block(batch.column(cols[vec_col]), work_dtype))
                 ids_parts.append(batch.column(cols[id_col]).to_numpy(zero_copy_only=False))
                 mat_parts.append(mat)
                 clus_parts.append(
@@ -1196,9 +1169,8 @@ class ResidentIvfStore:
         # normalize in float64 THEN cast — the exact sequence of
         # collect_normalized_queries + query()'s astype, so scores agree
         # to the last bit with the distributed path
-        q = _normalize_local_query(vector).astype(
-            "float32" if self.dtype == "int8" else self.dtype
-        )
+        q = np.asarray(vector, dtype=np.float64).reshape(1, -1)
+        q = unit_rows(q)[0].astype("float32" if self.dtype == "int8" else self.dtype)
         k = len(self._cent32)
         npb = min(nprobe, k)
         # route on the FLOAT centroids, exactly like query()'s routing

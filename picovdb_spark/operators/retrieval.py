@@ -361,6 +361,7 @@ def mmr_rerank(
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     from picovdb_spark.functions.vector import l2_normalize
+    from picovdb_spark.operators.ann import stack_vectors
 
     vec = F.col(vector_col) if normalized else l2_normalize(F.col(vector_col))
     src = results.select(
@@ -388,7 +389,7 @@ def mmr_rerank(
         # deterministic candidate order: rows sorted by id so every
         # argmax tie-break below is engine- and partitioning-independent
         pdf = pdf.sort_values("d", kind="mergesort").reset_index(drop=True)
-        m = np.asarray(list(pdf["v"]), dtype=np.float64)
+        m = stack_vectors(pdf["v"])
         rel = np.round(pdf["r"].to_numpy(np.float64), rt)
         picked: list[int] = []
         red = np.zeros(n, dtype=np.float64)  # max cos to picked, rounded

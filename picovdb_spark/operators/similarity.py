@@ -37,7 +37,6 @@ DuckDB oracle.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
@@ -45,7 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from picovdb_spark.functions.vector import dot, l2_normalize
+from picovdb_spark.functions.vector import dot, l2_normalize, unit_rows, vector_block
 from picovdb_spark.schema import K_DELETED, K_ID, K_METRICS, K_VECTOR
 
 WhereClause = dict[str, Any] | Column | Callable[[dict], bool] | None
@@ -152,46 +151,12 @@ def _normalized_queries(queries: DataFrame, query_id: str, vector_col: str) -> D
     )
 
 
-# Input-stream prefetch depth (Arrow batches) for the GEMM kernel's
-# double-buffering pump thread; 0 (default) disables the thread.
-# A/B-measured OFF on local[32]: neither the in-memory nor the
-# disk-parquet tier showed a win (the JVM writer thread + socket buffer
-# already overlap enough locally), so the default avoids the extra
-# thread per task. Raise it when the input stream is genuinely slow
-# relative to the GEMM — e.g. object-store reads on a real cluster —
-# via PICOVDB_SPARK_GEMM_PREFETCH on the DRIVER (read at plan-build
-# time and shipped in the task closure, so the env var only needs to be
-# set where the plan is constructed), or by setting this module
-# attribute programmatically. None = unset (env var supplies the
-# default); an explicit 0 disables prefetch even when the env var is
-# set — the sentinel keeps "module attribute wins" true for 0.
-GEMM_PREFETCH_DEPTH: int | None = None
-
-
 # Ceiling on the driver-resident float64 query matrix (bytes). Query
 # batches are broadcast state by design (every kernel scores against
 # them); a batch past this size must be CHUNKED by the caller — failing
 # fast with instructions beats a driver OOM three stages into the job.
 # 8 GiB ≈ 1M queries at dim 1024.
 MAX_QUERY_MATRIX_BYTES = 8 << 30
-
-
-def _unit_rows(mat):
-    """Row-wise L2 normalize a float64 matrix with the store's zero ⇒ e₀
-    rule (pico_vdb.py:62-67) — THE normalize kernel shared by the
-    driver-side query paths and the blocked kNN join's cell kernel, so
-    the rule can never desynchronize between them. Copies before the e₀
-    substitution (the input may alias a caller's array)."""
-    import numpy as np
-
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    zero = norms == 0.0
-    if zero.any():
-        mat = mat.copy()
-        mat[zero] = 0.0
-        mat[zero, 0] = 1.0
-        norms[zero] = 1.0
-    return mat / norms[:, None]
 
 
 def normalize_query_matrix(qids, qmat):
@@ -211,22 +176,25 @@ def normalize_query_matrix(qids, qmat):
     # (or anything) — without this they crash executor-side in
     # pa.array(..., type=pa.string()) with an opaque ArrowTypeError
     qids = np.asarray([str(i) for i in qids], dtype=object)
-    qmat = np.asarray(qmat, dtype=np.float64)
+    qmat = np.asarray(qmat)
     if qmat.ndim != 2 or len(qids) != qmat.shape[0]:
         raise ValueError(
             f"query matrix must be (len(ids), dim); got ids={len(qids)} "
             f"matrix={qmat.shape}"
         )
-    if qmat.nbytes > MAX_QUERY_MATRIX_BYTES:
+    # sized as float64 BEFORE the cast, so an oversized float32 batch
+    # fails without allocating its float64 copy
+    f64_bytes = 8 * qmat.size
+    if f64_bytes > MAX_QUERY_MATRIX_BYTES:
         raise ValueError(
-            f"query batch is {qmat.nbytes >> 20} MiB as a float64 matrix "
+            f"query batch is {f64_bytes >> 20} MiB as a float64 matrix "
             f"(cap {MAX_QUERY_MATRIX_BYTES >> 20} MiB): query batches are "
             "driver-resident broadcast state — split the batch and union "
             "the per-chunk results (each chunk's top-k is independent), "
             "or use knn_join_blocked for a query side that should never "
             "live on the driver at all"
         )
-    return qids, _unit_rows(qmat)
+    return qids, unit_rows(qmat.astype(np.float64, copy=False))
 
 
 def collect_normalized_queries(queries: DataFrame, query_id: str, vector_col: str):
@@ -239,33 +207,18 @@ def collect_normalized_queries(queries: DataFrame, query_id: str, vector_col: st
     buffer + reshape instead of a million boxed floats (measured 0.35s →
     ~0.02s at 1000 × 1024). Returns (ids, qmat) — empty qmat if no
     queries."""
-    import numpy as np
-
     tbl = queries.select(
         F.col(query_id).cast("string").alias("query_id"), F.col(vector_col)
     ).toArrow()
-    if tbl.num_rows == 0:
-        return np.empty(0, dtype=object), np.empty((0, 0))
-    qids = np.asarray(tbl.column("query_id").to_pylist(), dtype=object)
-    vec = tbl.column(vector_col).combine_chunks()
-    if vec.null_count:
-        # a null list row would silently vanish in flatten() and shift
-        # every later row's values in the reshape — fail loudly instead
-        raise ValueError(f"query column {vector_col!r} contains null vectors")
-    vals = vec.flatten().to_numpy(zero_copy_only=False)
-    f64_bytes = 8 * vals.size
-    if f64_bytes > MAX_QUERY_MATRIX_BYTES:
-        raise ValueError(
-            f"query batch is {f64_bytes >> 20} MiB as a float64 matrix "
-            f"(cap {MAX_QUERY_MATRIX_BYTES >> 20} MiB): query batches are "
-            "driver-resident broadcast state — split the batch and union "
-            "the per-chunk results (each chunk's top-k is independent), "
-            "or use knn_join_blocked for a query side that should never "
-            "live on the driver at all"
-        )
-    # one shared normalize kernel (zero ⇒ e₀, pico_vdb.py:585-590) so the
-    # DataFrame and pre-collected paths can never desynchronize
-    return normalize_query_matrix(qids, vals.reshape(tbl.num_rows, -1))
+    qids = tbl.column("query_id").to_pylist()
+    vec = tbl.column(vector_col)
+    # decode in the Arrow value type (a zero-copy view):
+    # normalize_query_matrix checks the float64 size before it casts, and
+    # its shared normalize keeps the DataFrame and pre-collected paths
+    # from desynchronizing
+    return normalize_query_matrix(
+        qids, vector_block(vec, vec.type.value_type.to_pandas_dtype())
+    )
 
 
 def batch_query(
@@ -581,13 +534,7 @@ def knn_join_blocked(
             return empty
 
         def unit(col):
-            vec = col.combine_chunks()
-            if vec.null_count:
-                # a null list row silently vanishes in flatten() and
-                # shifts every later row in the reshape — fail loudly
-                raise ValueError("knn_join_blocked: null vectors in input")
-            vals = vec.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            out = _unit_rows(vals.reshape(len(vec), -1))
+            out = unit_rows(vector_block(col, np.float64))
             # float32 mode truncates AFTER the float64 normalize — the
             # same sequence collect_normalized_queries feeds _gemm_topk,
             # so the two serving paths can never disagree on a vector
@@ -770,9 +717,10 @@ def _gemm_topk(
     executor, not per task.
 
     The vector block is reconstructed by flattening the Arrow list column
-    and reshaping — zero per-row Python work; the only copy is the dtype
-    cast. `score_dtype="float64"` rounds the full score matrix and
-    selects tie-complete on the ROUNDED values (bit-identical to the
+    and reshaping (`vector_block`) — zero per-row Python work, and no
+    copy beyond the dtype cast and the normalized output.
+    `score_dtype="float64"` rounds the full score matrix and selects
+    tie-complete on the ROUNDED values (bit-identical to the
     DuckDB oracle, round-1 pinned behavior). `"float32"` GEMMs in single
     precision (the reference's own precision) and selects on RAW scores
     with a pad of 1.5·10^-round_to, so every row whose rounded score
@@ -816,73 +764,6 @@ def _gemm_topk(
     )
     pad = 1.5 * 10.0 ** (-round_to)
     dtype = np.float32 if use32 else np.float64
-    # precedence: a programmatic module-attribute override wins when
-    # SET (including an explicit 0, which disables prefetch); the env
-    # var supplies the default otherwise. Parse loudly — a malformed
-    # value should name the setting, not surface as a bare ValueError
-    # three calls deep.
-    if GEMM_PREFETCH_DEPTH is not None:
-        prefetch_depth = int(GEMM_PREFETCH_DEPTH)
-    else:
-        raw = os.environ.get("PICOVDB_SPARK_GEMM_PREFETCH", "0")
-        try:
-            prefetch_depth = int(raw)
-        except ValueError as exc:
-            raise ValueError(
-                f"PICOVDB_SPARK_GEMM_PREFETCH must be an integer, got {raw!r}"
-            ) from exc
-
-    def prefetched(it: Iterator, depth: int = 2) -> Iterator:
-        if depth <= 0:
-            yield from it
-            return
-        # Double-buffer the Arrow input stream: a pump thread reads the
-        # next batch off the worker socket while the main thread is in
-        # the GEMM (BLAS releases the GIL, so the socket read + Arrow
-        # decode genuinely overlap the matmul). Only pays off when a
-        # task's partition spans >1 Arrow batch; costs one thread spawn
-        # otherwise.
-        import queue
-        import threading
-
-        q: queue.Queue = queue.Queue(maxsize=depth)
-        done = object()
-        stop = threading.Event()
-
-        def offer(item) -> bool:
-            # bounded put that gives up when the consumer is gone — a
-            # plain q.put would block FOREVER if score_batches dies
-            # mid-stream, leaving a live thread draining this task's
-            # input socket inside a REUSED Python worker
-            while not stop.is_set():
-                try:
-                    q.put(item, timeout=0.1)
-                    return True
-                except queue.Full:
-                    continue
-            return False
-
-        def pump() -> None:
-            try:
-                for item in it:
-                    if not offer(item):
-                        return
-                offer(done)
-            except BaseException as exc:  # propagate into the consumer
-                offer(exc)
-
-        threading.Thread(target=pump, daemon=True).start()
-        try:
-            while True:
-                item = q.get()
-                if item is done:
-                    return
-                if isinstance(item, BaseException):
-                    raise item
-                yield item
-        finally:
-            stop.set()
-
     def score_batches(batches: Iterator) -> Iterator:
         b_qids, b_qmat = bc.value
         # Per-batch GEMM + local top-k, accumulated and emitted ONCE at
@@ -896,25 +777,13 @@ def _gemm_topk(
         acc_i: list = []  # store ids
         acc_s: list = []  # scores (raw f32 for use32, rounded f64 else)
         n_batches = 0
-        for batch in prefetched(batches, depth=prefetch_depth):
+        for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            flat = batch.column(1).flatten()
-            vals = flat.to_numpy(zero_copy_only=False)
-            skip_norm = use32 and normalized
-            if skip_norm:
-                # read-only zero-copy view is fine — we never write it
-                vmat = np.asarray(vals.reshape(n, -1), dtype=dtype)
-            else:
-                vmat = vals.reshape(n, -1).astype(dtype)  # owned, writable
-                norms = np.sqrt((vmat * vmat).sum(axis=1))
-                zero = norms == 0.0
-                if zero.any():  # zero vector ⇒ e₀ (pico_vdb.py:62-67)
-                    vmat[zero] = 0.0
-                    vmat[zero, 0] = 1.0
-                    norms[zero] = 1.0
-                vmat /= norms[:, None]
+            vmat = vector_block(batch.column(1), dtype)
+            if not (use32 and normalized):
+                vmat = unit_rows(vmat)
             scores = b_qmat @ vmat.T  # (nq, n)
             kk = min(top_k, n)
             if use32:

@@ -105,65 +105,12 @@ def driver_blas_threads(n: int | None = None):
         set_fn(prev)
 
 
-_MALLOC_TUNED = False
-
-
-def _tune_malloc() -> None:
-    """OPT-IN (env `SPARK_GRAFT_MALLOC_TUNE=1`, default OFF): raise
-    glibc's mmap/trim thresholds to 1 GB, in this process (mallopt) and
-    for every descendant (env vars, read by the JVM's Python workers at
-    startup).
-
-    Why it exists: hosts that provision guest memory lazily charge the
-    first touch of a never-before-provisioned page ~100x a normal minor
-    fault; glibc serves any allocation above its mmap threshold
-    (dynamic, capped at 32 MB) with a FRESH mmap and returns it on
-    free, so every >=32 MB numpy buffer pays first-touch provisioning
-    again and again. Raising the thresholds keeps those buffers on a
-    heap that is provisioned once per high-water mark (measured on a
-    64 MB touch-every-page loop: first touch 5.7 s -> 0.3 s).
-
-    Why it is OFF by default (r13): applied process-global and exported
-    to the JVM and all 32 Python workers, the 1 GB TRIM threshold makes
-    every process retain its high-water heap forever and the 1 GB MMAP
-    threshold parks every multi-hundred-MB kernel buffer on a brk heap
-    that fragments and is never returned. Under a full 57-row suite
-    that retained memory compounded into system-wide pressure: the r12
-    driver bench regressed 37/57 queries (geomean 0.69x), with 8-core
-    runs BEATING 32-core on the worst rows — contention, not compute.
-    The tuning was validated only on children of one row; the full
-    suite falsified it. It remains available for single-job deployments
-    where one tenant owns the host and the first-touch cost dominates,
-    but must be re-validated on the FULL workload before enabling.
-    """
-    global _MALLOC_TUNED
-    if _MALLOC_TUNED:
-        return
-    _MALLOC_TUNED = True
-    if os.environ.get("SPARK_GRAFT_MALLOC_TUNE", "0") != "1":
-        return
-    threshold = str(1 << 30)
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", threshold)
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", threshold)
-    try:
-        import ctypes
-
-        libc = ctypes.CDLL("libc.so.6", use_errno=True)
-        # mallopt constants from malloc.h: M_TRIM_THRESHOLD=-1,
-        # M_MMAP_THRESHOLD=-3
-        libc.mallopt(-3, int(os.environ["MALLOC_MMAP_THRESHOLD_"]))
-        libc.mallopt(-1, int(os.environ["MALLOC_TRIM_THRESHOLD_"]))
-    except Exception:  # pragma: no cover - non-glibc platform
-        pass
-
-
 def get_spark(app_name: str = "picovdb_spark", **confs: str) -> SparkSession:
     # one BLAS thread per Python worker: tasks already saturate the cores,
     # and 32 workers × multi-threaded OpenBLAS oversubscribes (workers
     # inherit the env from the local JVM, so set it before startup)
     os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
     os.environ.setdefault("OMP_NUM_THREADS", "1")
-    _tune_malloc()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
     merged = {**_DEFAULT_CONFS, **confs}

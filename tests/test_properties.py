@@ -12,7 +12,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from picovdb_spark.functions.vector import auto_id, dot, l2_norm, l2_normalize
+from picovdb_spark.functions.vector import auto_id, dot, l2_norm, l2_normalize, unit_rows
 from pyspark.sql import functions as F
 
 DIM = 8
@@ -35,6 +35,11 @@ def test_normalize_matches_numpy(sess, vs):
         [([float(x) for x in v],) for v in vs], schema="v array<float>"
     )
     got = df.select(l2_normalize(F.col("v")).alias("n"), l2_norm(F.col("v")).alias("m")).collect()
+    # the kernel-side form of the rule (every NumPy kernel normalizes
+    # through unit_rows) must agree with the Catalyst form, zero ⇒ e₀
+    # included; only the summation order differs (left fold vs pairwise)
+    kernel = unit_rows(np.asarray(vs, dtype=np.float32).astype(np.float64))
+    np.testing.assert_allclose(np.asarray([row["n"] for row in got]), kernel, rtol=1e-12, atol=0)
     for (v, row) in zip(vs, got):
         x = np.asarray(v, dtype=np.float32).astype(np.float64)
         norm = float(np.sqrt((x * x).sum()))

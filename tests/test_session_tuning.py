@@ -1,54 +1,21 @@
-"""Process-global tuning in picovdb_spark.session must stay opt-in.
+"""Starting a session must export no allocator settings.
 
 The r12 driver bench measured a suite-wide 0.69x geomean regression
-traced to the glibc malloc retuning (1 GB mmap/trim thresholds exported
+traced to a glibc malloc retuning (1 GB mmap/trim thresholds exported
 to the JVM and all 32 Python workers): every descendant retained its
 high-water heap forever and the suite collapsed under memory pressure
 at 32 concurrent workers (8-core runs BEAT 32-core on the worst rows).
-These tests pin the r13 fix: the tuning does nothing unless
-SPARK_GRAFT_MALLOC_TUNE=1.
 """
 
 from __future__ import annotations
 
 import os
-import subprocess
-import sys
-
-import picovdb_spark.session as S
 
 
-def test_tune_malloc_default_off(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_MALLOC_TUNE", raising=False)
-    monkeypatch.delenv("MALLOC_MMAP_THRESHOLD_", raising=False)
-    monkeypatch.delenv("MALLOC_TRIM_THRESHOLD_", raising=False)
-    monkeypatch.setattr(S, "_MALLOC_TUNED", False)
-    S._tune_malloc()
-    # Default off: no allocator env exported to descendants.
-    assert "MALLOC_MMAP_THRESHOLD_" not in os.environ
-    assert "MALLOC_TRIM_THRESHOLD_" not in os.environ
-
-
-def test_tune_malloc_opt_in_subprocess():
-    # Opt-in path exercised in a child so its mallopt() cannot perturb
-    # the pytest process's allocator for the rest of the suite.
-    code = (
-        "import os; os.environ['SPARK_GRAFT_MALLOC_TUNE']='1';"
-        "import picovdb_spark.session as S; S._tune_malloc();"
-        "assert os.environ['MALLOC_MMAP_THRESHOLD_'] == str(1 << 30);"
-        "assert os.environ['MALLOC_TRIM_THRESHOLD_'] == str(1 << 30);"
-        "print('ok')"
-    )
-    env = {k: v for k, v in os.environ.items() if not k.startswith("MALLOC_")}
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        env=env,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    assert out.returncode == 0, out.stderr
-    assert "ok" in out.stdout
+def test_tune_malloc_default_off(spark):
+    # `spark` ran get_spark(): no allocator env reaches the JVM or the
+    # Python workers it forks.
+    assert [k for k in os.environ if k.startswith("MALLOC_")] == []
 
 
 def test_pow_tables_sized_to_need():

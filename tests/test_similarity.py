@@ -203,25 +203,39 @@ def test_knn_join_blocked_nan_k0_and_bad_blocks(spark):
         knn_join_blocked(q, df, k=1, left_blocks=0, **kw)
 
 
-def test_null_query_vector_fails_loudly(store, spark):
+@pytest.mark.parametrize("kind", ["null", "ragged"])
+@pytest.mark.parametrize("side", ["query", "store"])
+def test_null_query_vector_fails_loudly(spark, side, kind):
     """A null vector row would silently vanish in the Arrow flatten and
-    shift every later row's values in the reshape — both the collect
-    path and the blocked join must raise instead."""
+    shift every later row's values in the reshape; a dim-3 row beside a
+    dim-5 row would reshape into two wrong dim-4 vectors. Every NumPy
+    kernel path must raise a named ValueError instead — on the query
+    side and on the store side."""
+    from picovdb_spark.operators.resident import ResidentGemmStore
     from picovdb_spark.operators.similarity import knn_join_blocked
 
-    dim = len(store.first()["_vector_"])
-    q = spark.createDataFrame(
-        [("q0", [1.0] * dim), ("q1", None)],
-        f"query_id string, _vector_ array<float>",
+    schema = f"{K_ID} string, _vector_ array<float>"
+    good = spark.createDataFrame(
+        [("g0", [1.0, 0.0, 0.0, 0.0]), ("g1", [0.0, 1.0, 0.0, 0.0])], schema
     )
-    with pytest.raises(Exception, match="null vectors"):
-        batch_query(store, q, top_k=2, method="gemm").collect()
-    nn = q.withColumnRenamed("query_id", "id").withColumnRenamed("_vector_", "v")
-    with pytest.raises(Exception, match="null vectors"):
-        knn_join_blocked(
-            nn, nn, k=1, left_id="id", right_id="id", left_vec="v", right_vec="v",
-            left_blocks=1, right_blocks=1,
-        ).collect()
+    odd = None if kind == "null" else [0.0, 1.0, 0.0, 0.0, 0.0]
+    # one partition, so both rows reach the same Arrow batch
+    bad = spark.createDataFrame([("b0", [1.0, 0.0, 0.0]), ("b1", odd)], schema).coalesce(1)
+    match = "null vectors" if kind == "null" else "ragged vectors"
+    left, right = (bad, good) if side == "query" else (good, bad)
+    queries = left.withColumnRenamed(K_ID, "query_id")
+    with pytest.raises(Exception, match=match):
+        batch_query(right, queries, top_k=2, method="gemm").collect()
+    kw = dict(left_id=K_ID, right_id=K_ID, left_vec="_vector_", right_vec="_vector_")
+    with pytest.raises(Exception, match=match):
+        knn_join_blocked(left, right, k=1, left_blocks=1, right_blocks=1, **kw).collect()
+    if side == "store":
+        rs = ResidentGemmStore(bad)
+        try:
+            with pytest.raises(Exception, match=match):
+                rs.materialize()
+        finally:
+            rs.close()
 
 
 def test_precollected_tuple_rejects_bare_string_ids(store):
